@@ -92,11 +92,10 @@ def materialized(df: DataFrame, eager: bool = False) -> DataFrame:
     ``SPARK_GRAFT_MATERIALIZE_EAGER=1`` keeps the r12 behaviour A/B-able.
 
     ``eager=True`` opts a single site back into build-time materialization
-    — the overlap primitive (guide §2.6): a caller that runs an
-    independent pipeline leg on a worker thread passes eager=True so the
-    leg EXECUTES there, back-filling the driver gaps of the main thread's
-    loop, instead of deferring itself into the main thread's final
-    action."""
+    — the overlap pattern (guide §2.6): an independent pipeline leg run
+    through ``session.overlap`` passes eager=True so the leg EXECUTES on
+    its own thread, back-filling the driver gaps of the other legs,
+    instead of deferring itself into the caller's final action."""
     if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
         return df
     if eager or os.environ.get("SPARK_GRAFT_MATERIALIZE_EAGER"):

@@ -1,7 +1,8 @@
 """Set operations (SURVEY §2.7 O6) — absent from the reference (its
 multi-table configs are independent pipelines), native here.
 
-UNION/INTERSECT/EXCEPT in their SQL (distinct) forms plus the ALL variants.
+UNION/INTERSECT/EXCEPT in their SQL (distinct) forms plus the INTERSECT /
+EXCEPT ALL variants (UNION ALL is plain ``unionByName``).
 Physically these are aggregates/joins on all columns — same shuffle rules as
 any wide op; distinct forms get map-side partial dedup for free.
 """
@@ -13,10 +14,6 @@ from pyspark.sql import DataFrame
 
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
 
 
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -651,31 +651,6 @@ def ivf_ann_topk(
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
-def cosine_pairs(
-    embeddings: DataFrame,
-    block_col: str,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-duplicate pairs within blocks (exact within-block):
-    pairs sharing ``block_col`` with cosine >= threshold.  Blocking bounds
-    the pair count; at scale the block column is an LSH bucket."""
-    a = embeddings.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("id_1"), F.col(vec_col).alias("v1")
-    )
-    b = embeddings.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("id_2"), F.col(vec_col).alias("v2")
-    )
-    joined = a.join(b, on="__blk").filter(F.col("id_1") < F.col("id_2"))
-    scored = joined.select(
-        F.col("id_1").alias(f"{id_col}_1"),
-        F.col("id_2").alias(f"{id_col}_2"),
-        cosine("v1", "v2").alias("cosine"),
-    )
-    return scored.filter(F.col("cosine") >= F.lit(threshold))
-
-
 def quantize_embeddings(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:

@@ -31,15 +31,15 @@ quarantine side output and count as rows_failed; with
 (fail-fast parity).
 
 Multi-table scheduling (T7, DbMigrator.java:42,76-106): tables submit in
-declared order onto a ``thread_count`` pool; concurrent Spark actions
-interleave at the task scheduler level, the declarative analog of the
-reference's table-task pool.
+declared order onto a ``thread_count`` pool (``session.overlap``);
+concurrent Spark actions interleave at the task scheduler level, the
+declarative analog of the reference's table-task pool.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +52,7 @@ from .operators.limits import read_limit
 from .operators.ttl import ttl_preserving_columns
 from .plans.spec import PipelineSpec, TableMigration
 from .plans.validate import validate_migration_schema
+from .session import overlap
 from .sinks.sinks import noop_sink, quarantine_split
 
 
@@ -239,8 +240,8 @@ def run_pipeline(
         for t in spec.tables
     ]  # plan-all-then-run (any failure aborts before any table executes)
 
-    if spec.thread_count <= 1:
-        return [_run_one(p, sink) for p in planned]
-    with ThreadPoolExecutor(max_workers=spec.thread_count) as pool:
-        futures = [pool.submit(_run_one, p, sink) for p in planned]  # declared order
-        return [f.result() for f in futures]
+    return overlap(
+        spark,
+        [partial(_run_one, p, sink) for p in planned],  # declared order
+        max_workers=spec.thread_count,
+    )

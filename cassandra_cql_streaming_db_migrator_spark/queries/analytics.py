@@ -10,6 +10,8 @@ wherever a sum crosses partitions, total orders on every LIMIT.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,6 +94,7 @@ from ..operators.timeseries import (
     ohlc_downsample,
     ohlc_downsample_sql,
 )
+from ..session import overlap
 from ..sources.parquet import load_table
 from . import QueryDef
 
@@ -1474,8 +1477,6 @@ def rfm_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.caching import materialized
     from ..operators.windows import distributed_ntile
 
@@ -1512,8 +1513,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey", (6 - F.col("__q")).cast("long").alias(alias)
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        legs = list(pool.map(leg, specs))
+    legs = overlap(spark, [partial(leg, spec) for spec in specs])
     out = scored.select("o_custkey", "monetary_cents")
     for l in legs:
         out = out.join(l, "o_custkey")

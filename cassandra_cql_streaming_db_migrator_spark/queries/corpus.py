@@ -51,6 +51,7 @@ from ..operators.textops import (
     vocab_head_coverage,
     vocab_head_coverage_sql,
 )
+from ..session import overlap
 from ..sources.parquet import load_table
 from . import QueryDef
 
@@ -578,8 +579,6 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators (each banded / broadcast / one-pass — nothing new
     executes), one flag join at corpus grain, six filtered aggregates;
     the funnel itself is 6 driver rows."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.caching import materialized
     from ..operators.dedup import (
         canonical_per_component,
@@ -660,11 +659,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True,
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fut = pool.submit(fuzzy_leg)
-        flags_fut = pool.submit(flags_leg)
-        f_drop = f_fut.result()
-        flags = flags_fut.result()
+    f_drop, flags = overlap(spark, [fuzzy_leg, flags_leg])
 
     flagged = flags.join(
         f_drop.withColumn("__df", F.lit(1)), "doc_id", "left"

@@ -11,6 +11,8 @@ same frozen constants the Spark operators use.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +67,7 @@ from ..operators.textops import (
     tfidf_top_terms,
     trigram_lm_score,
 )
+from ..session import overlap
 from ..sources.parquet import load_table
 from . import QueryDef
 from ..operators.caching import materialized
@@ -2211,20 +2214,16 @@ def graph_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     # the per-width beam walks are independent driver-paced hop loops —
-    # overlap them from a thread pool (guide §2.6) so one width's hop jobs
-    # back-fill the others' driver gaps; the curve rows are then composed
-    # in width order exactly as the sequential loop did
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(_BEAM_CURVE_WIDTHS)) as pool:
-        visited_by_width = list(
-            pool.map(
-                lambda b: graph_beam_visited(
-                    nodes, edges, query, beam=b, hops=3
-                ),
-                _BEAM_CURVE_WIDTHS,
-            )
-        )
+    # overlap them (guide §2.6) so one width's hop jobs back-fill the
+    # others' driver gaps; the curve rows are then composed in width order
+    # exactly as the sequential loop did
+    visited_by_width = overlap(
+        spark,
+        [
+            partial(graph_beam_visited, nodes, edges, query, beam=b, hops=3)
+            for b in _BEAM_CURVE_WIDTHS
+        ],
+    )
     out = None
     for b, visited in zip(_BEAM_CURVE_WIDTHS, visited_by_width):
         top = (
@@ -3178,12 +3177,9 @@ def multimodal_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The three modality pipelines are INDEPENDENT (disjoint fingerprint
     # kernels, separate component loops) and each spends most of its wall
     # in a driver-paced CC round loop that leaves executors idle between
-    # rounds — so overlap them from a thread pool (guide §2.6 "overlap
-    # independent jobs"): one modality's round jobs back-fill the others'
-    # driver gaps.  Composition and values are unchanged; only when the
-    # work runs moves.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # rounds — so overlap them (guide §2.6 "overlap independent jobs"):
+    # one modality's round jobs back-fill the others' driver gaps.
+    # Composition and values are unchanged; only when the work runs moves.
     def text_leg():
         tfp = materialized(simhash_fingerprints(docs))
         comps = connected_components(
@@ -3215,15 +3211,9 @@ def multimodal_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ah, comps
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        ft, fi, fa = (
-            pool.submit(text_leg),
-            pool.submit(image_leg),
-            pool.submit(audio_leg),
-        )
-        tfp, tcomps = ft.result()
-        ih, icomps = fi.result()
-        ah, acomps = fa.result()
+    (tfp, tcomps), (ih, icomps), (ah, acomps) = overlap(
+        spark, [text_leg, image_leg, audio_leg]
+    )
     return (
         census(tfp.select("doc_id"), dropped_of(tcomps), "text")
         .unionByName(census(ih.select("doc_id"), dropped_of(icomps), "image"))
@@ -5032,8 +5022,6 @@ def ivf_pq_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= topk)
         .select("query_id", "vec_id")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.caching import materialized
 
     # eager: the four probe legs below consume it concurrently
@@ -5048,7 +5036,7 @@ def ivf_pq_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the four probe budgets are INDEPENDENT serves over the same loaded
     # index and the same materialized exact set — overlap them (guide
-    # §2.6, the graph_beam_curve pattern); pool.map preserves row order
+    # §2.6, the graph_beam_curve pattern); results come back in leg order
     def leg(p: int):
         serve = ivf_pq_adc_batch(
             spark, codes, cents, cell_ids, cvecs, queries,
@@ -5064,8 +5052,7 @@ def ivf_pq_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (p, n_hits, 1_000_000 * n_hits // (n_q * topk), n_cand)
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        rows = list(pool.map(leg, (1, 2, 4, 8)))
+    rows = overlap(spark, [partial(leg, p) for p in (1, 2, 4, 8)])
     return spark.createDataFrame(
         rows,
         "n_probe long, n_hits long, mean_recall_ppm long, "
@@ -5660,8 +5647,6 @@ def maintenance_planner(
     The threshold kwargs exist for the pytest battery to drive BOTH
     branches of every axis; the registry query runs the declared
     defaults."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from .streaming import (
         stream_distortion_monitor,
         stream_drift_monitor,
@@ -5688,13 +5673,14 @@ def maintenance_planner(
 
         return run
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_occ = pool.submit(leg("drift_monitor", stream_drift_monitor))
-        f_dis = pool.submit(
-            leg("distortion_monitor", stream_distortion_monitor)
-        )
-        f_mar = pool.submit(leg("margin_monitor", stream_margin_monitor))
-        occ, dis, mar = f_occ.result(), f_dis.result(), f_mar.result()
+    occ, dis, mar = overlap(
+        spark,
+        [
+            leg("drift_monitor", stream_drift_monitor),
+            leg("distortion_monitor", stream_distortion_monitor),
+            leg("margin_monitor", stream_margin_monitor),
+        ],
+    )
 
     occ_row = occ.agg(
         F.lit("occupancy").alias("axis"),

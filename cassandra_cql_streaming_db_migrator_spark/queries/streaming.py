@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import sqlexpr
+from ..session import overlap
 
 from ..streaming.stream import (
     latest_by_key_agg,
@@ -890,22 +891,23 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import load_table
     from ..streaming.stream import read_documents_stream_chunked
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_where = F.col("vec_id") % 10 != 0
     base = emb.where(base_where)
     m, sub_dim, n_cells = 4, 16, 8
     # quantizer training (driver-paced collects) and the arrival-chunk
     # scratch write are independent legs — overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _arr_fut = _pool.submit(
-            read_documents_stream_chunked, spark, emb.where(~base_where), 4
-        )
-        cell_ids, cvecs = _coarse_centroids(
-            base, n_cells, "embedding", "vec_id", m, sub_dim
-        )
-        arrivals = _arr_fut.result()
+    (cell_ids, cvecs), arrivals = overlap(
+        spark,
+        [
+            lambda: _coarse_centroids(
+                base, n_cells, "embedding", "vec_id", m, sub_dim
+            ),
+            lambda: read_documents_stream_chunked(
+                spark, emb.where(~base_where), 4
+            ),
+        ],
+    )
 
     def with_cell(df: DataFrame) -> DataFrame:
         valid = df.where(
@@ -992,23 +994,28 @@ def stream_distortion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import load_table
     from ..streaming.stream import read_documents_stream_chunked
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_where = F.col("vec_id") % 10 != 0
     base = emb.where(base_where)
     m, k, sub_dim, n_cells = 4, 4, 16, 8
-    # codebook/centroid training (driver-paced collects) overlaps the
-    # arrival-chunk scratch write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _arr_fut = _pool.submit(
-            read_documents_stream_chunked, spark, emb.where(~base_where), 4
-        )
+
+    def train():
         _, cents = pq_train_assign(base, "embedding", "vec_id", m, k, sub_dim)
-        cell_ids, cvecs = _coarse_centroids(
+        return cents, _coarse_centroids(
             base, n_cells, "embedding", "vec_id", m, sub_dim
         )
-        arrivals = _arr_fut.result()
+
+    # codebook/centroid training (driver-paced collects) overlaps the
+    # arrival-chunk scratch write (guide §2.6)
+    (cents, (cell_ids, cvecs)), arrivals = overlap(
+        spark,
+        [
+            train,
+            lambda: read_documents_stream_chunked(
+                spark, emb.where(~base_where), 4
+            ),
+        ],
+    )
     live = (
         distortion_frame(
             arrivals, cents, cell_ids, cvecs, "embedding", "vec_id",
@@ -1100,30 +1107,32 @@ def stream_margin_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import load_table
     from ..streaming.stream import read_documents_stream_chunked
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_where = F.col("vec_id") % 10 != 0
     from pyspark.sql import Window as _W
 
     # the reference-matrix collect and the arrival-chunk scratch write
     # are independent legs — overlap them (guide §2.6)
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _arr_fut = _pool.submit(
-        read_documents_stream_chunked, spark, emb.where(~base_where), 4
-    )
-    # metadata-scale: labels x R reference rows by construction
-    ref_rows = (
-        emb.where(base_where)
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                _W.partitionBy("label").orderBy(F.col("vec_id").asc())
+    ref_rows, arrivals = overlap(
+        spark,
+        [
+            # metadata-scale: labels x R reference rows by construction
+            lambda: (
+                emb.where(base_where)
+                .withColumn(
+                    "__rn",
+                    F.row_number().over(
+                        _W.partitionBy("label").orderBy(F.col("vec_id").asc())
+                    ),
+                )
+                .where(F.col("__rn") <= _MARGIN_REF_PER_LABEL)
+                .select("label", "embedding")
+                .collect()
             ),
-        )
-        .where(F.col("__rn") <= _MARGIN_REF_PER_LABEL)
-        .select("label", "embedding")
-        .collect()
+            lambda: read_documents_stream_chunked(
+                spark, emb.where(~base_where), 4
+            ),
+        ],
     )
     rlabels = np.array([r[0] for r in ref_rows])
     rmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in ref_rows])
@@ -1171,8 +1180,6 @@ def stream_margin_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "margin_ppm": pd.array(out_m, dtype="int64")}
             )
 
-    arrivals = _arr_fut.result()
-    _pool.shutdown()
     from pyspark.sql.types import LongType, StructField, StructType
 
     # output label field type derived from the input schema, not assumed
@@ -1649,22 +1656,22 @@ def stream_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_cluster_sample_state,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf_dir, "embeddings")
     valid = emb.where(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
     # Lloyd training (driver-paced collects) overlaps the corpus-chunk
     # scratch write (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _stream_fut = _pool.submit(
-            read_documents_stream_chunked, spark, valid, 4
-        )
-        cents = _lloyd_centroids(
-            valid.where(F.col("vec_id") % 10 != 0), 8, 2, "embedding", "vec_id"
-        )
-        stream = _stream_fut.result()
+    cents, stream = overlap(
+        spark,
+        [
+            lambda: _lloyd_centroids(
+                valid.where(F.col("vec_id") % 10 != 0),
+                8, 2, "embedding", "vec_id",
+            ),
+            lambda: read_documents_stream_chunked(spark, valid, 4),
+        ],
+    )
     hv = poly_hash(
         F.concat(F.col("vec_id").cast("string"), F.lit("#scs"))
     )
@@ -1774,8 +1781,6 @@ def contamination_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_index_cdc,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.caching import materialized
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1783,11 +1788,11 @@ def contamination_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The contamination SCREEN and the base index BUILD are independent
     # legs of the erasure chain (guide §2.6) — the screen needs only the
     # corpus/bench split, the build only the base split — so the screen
-    # runs eagerly on a worker thread while the main thread ensures the
-    # gated triple and clones it.  Materializing the screen also makes
-    # its two consumers (the CDC delete rows and the n_erased witness
-    # count) read ONE result-scale id list instead of executing the
-    # kernel twice.  Values unchanged.
+    # runs eagerly while the other leg ensures the gated triple and
+    # clones it.  Materializing the screen also makes its two consumers
+    # (the CDC delete rows and the n_erased witness count) read ONE
+    # result-scale id list instead of executing the kernel twice.
+    # Values unchanged.
     def screen():
         return materialized(
             bench_contamination(
@@ -1798,15 +1803,16 @@ def contamination_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True,
         )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        cont_fut = pool.submit(screen)
-        base = emb.where(F.col("vec_id") % 10 != 0)
+    base = emb.where(F.col("vec_id") % 10 != 0)
+
+    def build():
         _ensure_index_artifacts(
             spark, base, store, "embedding", "vec_id", 8, 4, 4, 16, "sidxe0"
         )
         for part in ("codes", "centroids", "codebooks"):
             clone_artifact(store, f"sidxe0_{part}", f"sidxe_{part}")
-        cont = cont_fut.result()
+
+    cont, _ = overlap(spark, [screen, build])
     # the screen's output is result-scale: the semi-join below broadcasts
     # it back into the corpus to build the delete rows
     dels = emb.join(F.broadcast(cont), "vec_id", "semi").withColumn(

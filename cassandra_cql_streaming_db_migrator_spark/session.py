@@ -21,8 +21,11 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -229,3 +232,37 @@ def tune_existing(spark: SparkSession) -> SparkSession:
             pass  # static conf on a started session — keep going
     _quiet_noisy_loggers(spark)
     return spark
+
+
+def overlap(
+    spark: SparkSession,
+    legs: Iterable[Callable[[], Any]],
+    max_workers: int | None = None,
+) -> list:
+    """Run independent zero-argument ``legs`` concurrently and return their
+    results in leg order — the engine's one concurrency construct, the
+    analog of the reference's ``threadCount`` table-task pool
+    (DbMigrator.java:42,76-106).
+
+    Each leg is wrapped by ``inheritable_thread_target(spark)``: PySpark
+    runs in pinned-thread mode, where a plain pool thread starts with no
+    local properties, so without the wrapper jobs run from a leg would lose
+    the caller's job description / group / scheduler pool and job tags.
+
+    Every leg runs to completion (DbMigrator polls until all tasks finish);
+    then the first failure in leg order is re-raised.  No pool thread
+    outlives the call.  With one leg, or ``max_workers <= 1``, there is
+    nothing to overlap: the legs run in order on the calling thread, where
+    the first failure propagates at once, as a sequential loop's would.
+    """
+    legs = list(legs)
+    workers = len(legs) if max_workers is None else min(max_workers, len(legs))
+    if workers <= 1:
+        return [leg() for leg in legs]
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # wrap per leg: each leg gets its own copy of the caller's
+        # properties, so one leg's setLocalProperty cannot leak into another
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(leg)) for leg in legs
+        ]
+    return [f.result() for f in futures]

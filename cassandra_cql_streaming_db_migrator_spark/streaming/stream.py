@@ -29,9 +29,13 @@ import math
 import os
 import tempfile
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..session import overlap
 
 
 def _as_stream_dir(path: str) -> str:
@@ -926,8 +930,12 @@ def read_documents_stream_chunked(
             os.utime(os.path.join(d, f), ns=(ns, ns))
     # the written files carry exactly the caller frame's schema (minus a
     # dropped chunk_col) — deriving it from the frame skips a per-drain
-    # parquet listing + footer read on the driver
-    schema = (docs.drop(chunk_col) if chunk_col is not None else docs).schema
+    # parquet listing + footer read on the driver; its fields are rebuilt
+    # nullable, as the parquet re-read it replaced reports them
+    written = docs.drop(chunk_col) if chunk_col is not None else docs
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in written.schema]
+    )
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -961,7 +969,6 @@ def streaming_incremental_dedup(
     need).
     """
     import pandas as pd
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..operators.caching import materialized
     from ..operators.dedup import (
@@ -972,28 +979,26 @@ def streaming_incremental_dedup(
 
     # The two reference-state kernels and the arrival-chunk scratch write
     # are three INDEPENDENT legs that together gate the first microbatch
-    # (guide §2.6): build the signature and gram frames eagerly on worker
-    # threads while the main thread writes the chunk scratch and starts
-    # the stream — by the time batch 0 probes, the state is materialized.
+    # (guide §2.6): build the signature and gram frames eagerly while the
+    # chunk scratch is written — by the time batch 0 probes, the state is
+    # materialized.
     scratch = tempfile.mkdtemp(prefix="stream_docs_chunks_")
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        signed_fut = pool.submit(
+    corpus_signed, corpus_grams, stream = overlap(
+        spark,
+        [
             lambda: materialized(
                 minhash_signature_df(corpus, text_col, id_col, 5, "arrow"),
                 eager=True,
-            )
-        )
-        grams_fut = pool.submit(
+            ),
             lambda: materialized(
                 cross_gram_sets(corpus, "old", text_col, id_col),
                 eager=True,
-            )
-        )
-        stream = read_documents_stream_chunked(
-            spark, arrivals, n_chunks, scratch_dir=scratch
-        )
-        corpus_signed = signed_fut.result()
-        corpus_grams = grams_fut.result()
+            ),
+            lambda: read_documents_stream_chunked(
+                spark, arrivals, n_chunks, scratch_dir=scratch
+            ),
+        ],
+    )
 
     collected: list[pd.DataFrame] = []
 
@@ -1715,6 +1720,7 @@ def streaming_index_cdc(
         # and the two applies are independent writes to different paths —
         # run them overlapped (guide §2.6); the watermark still commits
         # only after BOTH are on disk, preserving the replay contract.
+        # metadata-scale: at most one row per op code ('u' / 'd')
         ops = {
             r[0]: r[1]
             for r in mb_df.groupBy(op_col).count().collect()
@@ -1733,18 +1739,13 @@ def streaming_index_cdc(
             legs.append((f"{prefix}_tombstones", dels, tomb_path))
         if not legs:
             return
-        if len(legs) == 1:
-            _apply_epoch_append(legs[0][1], legs[0][2], epoch_id)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(_apply_epoch_append, df, path, epoch_id)
-                    for _, df, path in legs
-                ]
-                for f in futs:
-                    f.result()
+        overlap(
+            spark,
+            [
+                partial(_apply_epoch_append, df, path, epoch_id)
+                for _, df, path in legs
+            ],
+        )
         for art, _, _ in legs:
             state["artifacts"].add(art)
         _commit_ingest_watermark(

@@ -3,6 +3,11 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
+import pytest
+
 from cassandra_cql_streaming_db_migrator_spark.pipeline import run_pipeline
 from cassandra_cql_streaming_db_migrator_spark.plans.spec import load_spec
 from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_tables
@@ -87,13 +92,22 @@ def test_error_policy_failfast_aborts(spark, sf_dir):
 
 
 def test_thread_pool_scheduling(spark, sf_dir):
-    """T7: thread_count > 1 runs table tasks concurrently; results keep
-    declared order (DbMigrator.java:78-80)."""
+    """T7: thread_count > 1 runs table tasks concurrently (session.overlap);
+    results keep declared order (DbMigrator.java:78-80) whatever order the
+    tasks finish in; every task's jobs keep the caller's job description
+    (pinned-thread mode gives a plain pool thread none); and a failing
+    task re-raises only after its slower siblings finish, leaving no
+    thread behind."""
     spec = load_spec(
         {
-            "threadCount": 3,
+            "threadCount": 2,
             "tables": [
-                {"tableName": n, "keyColumns": [k], "continueOnRowError": False}
+                {
+                    "tableName": n,
+                    "keyColumns": [k],
+                    "continueOnRowError": False,
+                    "simulateOnly": False,
+                }
                 for n, k in [
                     ("region", "r_regionkey"),
                     ("nation", "n_nationkey"),
@@ -103,9 +117,36 @@ def test_thread_pool_scheduling(spark, sf_dir):
         }
     )
     tables = load_tables(spark, sf_dir)
-    results = run_pipeline(spark, spec, tables)
+    sc = spark.sparkContext
+    seen: dict[str, str | None] = {}
+    finished: list[str] = []
+
+    def sink(df, t):
+        # the first table finishes last: order must come from the legs
+        time.sleep(0.5 if t.table_name == "region" else 0)
+        seen[t.table_name] = sc.getLocalProperty("spark.job.description")
+        return df.count()
+
+    def failing_sink(df, t):
+        if t.table_name == "region":
+            raise RuntimeError("region sink failed")
+        time.sleep(0.5)
+        finished.append(t.table_name)
+        return df.count()
+
+    threads_before = threading.active_count()
+    sc.setJobDescription("__t7__")
+    try:
+        results = run_pipeline(spark, spec, tables, sink=sink)
+        with pytest.raises(RuntimeError, match="region sink failed"):
+            run_pipeline(spark, spec, tables, sink=failing_sink)
+    finally:
+        sc.setJobDescription(None)
     assert [r.table for r in results] == ["region", "nation", "customer"]
     assert [r.rows_migrated for r in results] == [5, 25, 150]
+    assert seen == dict.fromkeys(["region", "nation", "customer"], "__t7__")
+    assert sorted(finished) == ["customer", "nation"]
+    assert threading.active_count() == threads_before
 
 
 def test_ordered_multi_table_and_plan_all_then_run(spark, sf_dir):
