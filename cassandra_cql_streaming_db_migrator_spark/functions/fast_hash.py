@@ -1,12 +1,13 @@
-"""Arrow-vectorized twins of the Catalyst HOF hash kernels (functions.hashing).
+"""Arrow-vectorized document hash kernels over the folds of functions.hashing.
 
-The HOF implementations in operators/dedup.py are pure-JVM and
-oracle-exact, but Spark evaluates higher-order-function lambdas
-interpreted, not codegen'd — a 16-permutation minhash fold or a 53-bit
-simhash vote loop pays that interpreter cost per element.  These kernels
-compute the SAME integers (same moduli, same folds, bit-for-bit) in numpy
-over whole Arrow batches: one C-speed pass per batch instead of an
-interpreted expression tree per element.
+Spark evaluates higher-order-function lambdas interpreted, not
+codegen'd — a 16-permutation minhash fold or a 53-bit simhash vote loop
+written as Catalyst HOFs pays that interpreter cost per element.  These
+kernels compute the documented folds (the same moduli as
+functions.hashing, bit-for-bit) in numpy over whole Arrow batches: one
+C-speed pass per batch.  tests/test_fast_hash_props.py checks them
+against a direct per-document Python fold on arbitrary inputs, and the
+DuckDB oracles recompute the same integers in SQL.
 
 Everything here is per-row pure (no cross-row state), so the operators
 stay partitioning-invariant and distribute like any map: at 100 TB the
@@ -58,9 +59,9 @@ def shingle_hash_sets(
     """Distinct shingle hashes for every doc in one vectorized pass.
 
     Returns (doc_idx, hashes) sorted by (doc, hash): the distinct
-    ``poly_hash`` values of each doc's character shingles, replicating
-    dedup.shingle_hashes exactly (docs shorter than ``shingle_len``
-    contribute the hash of the whole text — 0 for empty).
+    ``poly_hash`` values of each doc's character shingles (docs shorter
+    than ``shingle_len`` contribute the hash of the whole text — 0 for
+    empty); reference fold: tests/test_fast_hash_props._ref_shingle_hashes.
     """
     n_docs = len(texts)
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n_docs)
@@ -105,8 +106,9 @@ def shingle_hash_sets(
 
 
 def minhash_signatures(texts: list[str], shingle_len: int) -> np.ndarray:
-    """(n_docs, 16) int64 minhash signatures — same integers as
-    dedup.minhash_signature over dedup.shingle_hashes."""
+    """(n_docs, 16) int64 minhash signatures: slot j is the min over the
+    doc's distinct shingle hashes h of (a_j*h + b_j) mod MINHASH_P;
+    reference fold: tests/test_fast_hash_props._ref_minhash."""
     n_docs = len(texts)
     doc_idx, hashes = shingle_hash_sets(texts, shingle_len)
     starts = np.searchsorted(doc_idx, np.arange(n_docs, dtype=np.int64))
@@ -127,9 +129,9 @@ def ngram_hash_lists(texts: list[str], n: int) -> list[np.ndarray]:
 
 
 def simhash_values(texts: list[str], token_sep: str = " ") -> np.ndarray:
-    """int64 simhash per doc — same integers as dedup.simhash_column
-    (split on ``token_sep`` keeping empties, poly-fold each token mod
-    2^53-111, majority vote per bit over 53 bits)."""
+    """int64 simhash per doc (split on ``token_sep`` keeping empties,
+    poly-fold each token mod 2^53-111, majority vote per bit over 53
+    bits); reference fold: tests/test_fast_hash_props._ref_simhash."""
     n_docs = len(texts)
     token_lists = [t.split(token_sep) for t in texts]
     n_tokens = np.fromiter(

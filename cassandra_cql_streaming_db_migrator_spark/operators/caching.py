@@ -89,7 +89,6 @@ def materialized(df: DataFrame, eager: bool = False) -> DataFrame:
     the exact regression set VERDICT r12 flagged.  The barrier contract
     (computed once, shared blocks, ContextCleaner release) is identical;
     only WHEN the materialization job runs moves.
-    ``SPARK_GRAFT_MATERIALIZE_EAGER=1`` keeps the r12 behaviour A/B-able.
 
     ``eager=True`` opts a single site back into build-time materialization
     — the overlap pattern (guide §2.6): an independent pipeline leg run
@@ -98,6 +97,6 @@ def materialized(df: DataFrame, eager: bool = False) -> DataFrame:
     instead of deferring itself into the caller's final action."""
     if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
         return df
-    if eager or os.environ.get("SPARK_GRAFT_MATERIALIZE_EAGER"):
+    if eager:
         return df.localCheckpoint(eager=True)
     return df.localCheckpoint(eager=False)

@@ -987,7 +987,7 @@ def streaming_incremental_dedup(
         spark,
         [
             lambda: materialized(
-                minhash_signature_df(corpus, text_col, id_col, 5, "arrow"),
+                minhash_signature_df(corpus, text_col, id_col),
                 eager=True,
             ),
             lambda: materialized(

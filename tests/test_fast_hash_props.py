@@ -1,8 +1,9 @@
 """Property tests: the vectorized segmented kernels in functions.fast_hash
 must equal a direct per-document Python implementation of the documented
 folds for ARBITRARY inputs — empty docs, exotic unicode, repeated spaces,
-docs shorter than the shingle.  (The Spark-side parity tests prove
-arrow==HOF on fixtures; these prove the segmentation logic itself.)"""
+docs shorter than the shingle.  The reference folds here are also what
+the Spark-side operator tests (tests/test_operators.py) compare the
+mapInPandas operators against on the fixtures."""
 
 from __future__ import annotations
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import Row
@@ -18,6 +19,7 @@ from cassandra_cql_streaming_db_migrator_spark.operators.similarity import cosin
 from cassandra_cql_streaming_db_migrator_spark.operators.ttl import ttl_preserving_columns
 from cassandra_cql_streaming_db_migrator_spark.sinks.sinks import quarantine_split, upsert_parquet
 from cassandra_cql_streaming_db_migrator_spark.sources.parquet import load_table
+from test_fast_hash_props import _ref_minhash, _ref_simhash
 
 
 def java_hashcode(s: str) -> int:
@@ -285,9 +287,24 @@ class TestAsofAndIntervalJoins:
             assert got == base, f"bucket width {width} diverged"
 
 
+def _ref_minhash_rows(df):
+    return sorted(
+        (r["doc_id"], tuple(_ref_minhash(r["text"], 5)))
+        for r in df.select("doc_id", "text").collect()
+    )
+
+
+def _ref_simhash_rows(df):
+    return sorted(
+        (r["doc_id"], _ref_simhash(r["text"]))
+        for r in df.select("doc_id", "text").collect()
+    )
+
+
 class TestArrowHofParity:
-    """The numpy Arrow kernels must produce bit-identical integers to the
-    pure-Catalyst HOF twins (same folds, same moduli)."""
+    """The mapInPandas dedup operators must produce exactly the integers of
+    the documented per-document Python folds (test_fast_hash_props'
+    references: same folds, same moduli) on Spark-delivered batches."""
 
     def test_minhash_signatures_identical(self, spark, sf_dir):
         from cassandra_cql_streaming_db_migrator_spark.operators.dedup import (
@@ -295,11 +312,9 @@ class TestArrowHofParity:
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        a = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(docs, "text", "doc_id", engine="arrow").collect())
-        h = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(docs, "text", "doc_id", engine="hof").collect())
-        assert a == h
+        got = sorted((r["doc_id"], tuple(r["sig"])) for r in
+                     minhash_signature_df(docs, "text", "doc_id").collect())
+        assert got == _ref_minhash_rows(docs)
 
     def test_simhash_identical(self, spark, sf_dir):
         from cassandra_cql_streaming_db_migrator_spark.operators.dedup import (
@@ -307,13 +322,12 @@ class TestArrowHofParity:
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        a = sorted(tuple(r) for r in simhash_fingerprints(docs, engine="arrow").collect())
-        h = sorted(tuple(r) for r in simhash_fingerprints(docs, engine="hof").collect())
-        assert a == h
+        got = sorted(tuple(r) for r in simhash_fingerprints(docs).collect())
+        assert got == _ref_simhash_rows(docs)
 
     def test_edge_strings(self, spark):
         """Empty docs, docs shorter than the shingle, multi-space tokens,
-        non-ascii codepoints — both engines must agree everywhere."""
+        non-ascii codepoints — operator and reference must agree everywhere."""
         from cassandra_cql_streaming_db_migrator_spark.operators.dedup import (
             minhash_signature_df,
             simhash_fingerprints,
@@ -324,27 +338,60 @@ class TestArrowHofParity:
              (5, "héllo wörld ünïcode"), (6, " lead and trail "), (7, "aaaaaaa")],
             "doc_id long, text string",
         )
-        a = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(df, "text", "doc_id", engine="arrow").collect())
-        h = sorted((r["doc_id"], tuple(r["sig"])) for r in
-                   minhash_signature_df(df, "text", "doc_id", engine="hof").collect())
-        assert a == h
-        sa = sorted(tuple(r) for r in simhash_fingerprints(df, engine="arrow").collect())
-        sh = sorted(tuple(r) for r in simhash_fingerprints(df, engine="hof").collect())
-        assert sa == sh
+        got = sorted((r["doc_id"], tuple(r["sig"])) for r in
+                     minhash_signature_df(df, "text", "doc_id").collect())
+        assert got == _ref_minhash_rows(df)
+        got = sorted(tuple(r) for r in simhash_fingerprints(df).collect())
+        assert got == _ref_simhash_rows(df)
+
+
+def _fold_dot(a, b):
+    """The engine's sequential left-fold dot product in doubles:
+    ((0 + a0*b0) + a1*b1) + ..."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _fold_cosine(a, b):
+    return _fold_dot(a, b) / (math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b)))
+
+
+def _embedding_rows(emb, *cols):
+    return [
+        tuple(r[c] for c in cols) + ([float(x) for x in r["embedding"]],)
+        for r in emb.select(*cols, "embedding").collect()
+    ]
 
 
 def test_block_top_pairs_arrow_equals_hof(spark, sf_dir):
-    """The applyInPandas pair kernel must reproduce the Catalyst fold
-    bit-for-bit (sequential-fold dot, same ranking)."""
+    """The applyInPandas pair kernel must equal a driver-side per-block
+    all-pairs fold bit-for-bit (sequential-fold dot, ranked by
+    (cosine desc, id_1, id_2))."""
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
         block_top_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3, engine="arrow").collect())
-    h = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3, engine="hof").collect())
-    assert a == h
+    got = sorted(tuple(r) for r in block_top_pairs(emb, "label", 3).collect())
+    blocks: dict = {}
+    for label, vid, vec in _embedding_rows(emb, "label", "vec_id"):
+        blocks.setdefault(label, []).append((vid, vec))
+    want = []
+    for label, members in blocks.items():
+        members.sort()
+        pairs = [
+            (_fold_cosine(v1, v2), i1, i2)
+            for n, (i1, v1) in enumerate(members)
+            for i2, v2 in members[n + 1:]
+        ]
+        pairs.sort(key=lambda p: (-p[0], p[1], p[2]))
+        want += [
+            (label, i1, i2, cos, rn)
+            for rn, (cos, i1, i2) in enumerate(pairs[:3], start=1)
+        ]
+    assert got == sorted(want)
 
 
 def test_block_pair_kernels_chunked_skewed_block(spark, sf_dir, monkeypatch):
@@ -378,23 +425,42 @@ def test_block_pair_kernels_chunked_skewed_block(spark, sf_dir, monkeypatch):
 
 
 def test_similarity_arrow_equals_hof(spark, sf_dir):
-    """Vectorized cosine scoring and LSH bucketing reproduce the Catalyst
-    folds bit-for-bit."""
+    """Vectorized cosine scoring and LSH bucketing equal driver-side
+    sequential folds bit-for-bit: exact top-k by (cosine desc, id), and
+    bucket bit b = sign of the fold against the frozen LCG plane b."""
     from cassandra_cql_streaming_db_migrator_spark.operators.similarity import (
         cosine_topk,
         with_bucket_ids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
+    rows = _embedding_rows(emb, "vec_id")
     q = emb.filter(F.col("vec_id") == 0)
-    a = [tuple(r) for r in cosine_topk(emb, q, 20, engine="arrow").collect()]
-    h = [tuple(r) for r in cosine_topk(emb, q, 20, engine="hof").collect()]
-    assert a == h
-    ba = sorted((r["vec_id"], r["__bucket"]) for r in
-                with_bucket_ids(emb, n_bits=6, engine="arrow").collect())
-    bh = sorted((r["vec_id"], r["__bucket"]) for r in
-                with_bucket_ids(emb, n_bits=6, engine="hof").collect())
-    assert ba == bh
+    qv = dict(rows)[0]
+    got = [tuple(r) for r in cosine_topk(emb, q, 20).collect()]
+    want = sorted(
+        ((vid, _fold_cosine(v, qv)) for vid, v in rows),
+        key=lambda t: (-t[1], t[0]),
+    )[:20]
+    assert got == want
+
+    def plane(b, i):
+        seed = (1103515245 * (b * 4096 + i) + 12345) % 2147483648
+        return float(seed) / 2147483648.0 * 2.0 - 1.0
+
+    def bucket(v, n_bits):
+        out = 0
+        for b in range(n_bits):
+            proj = 0.0
+            for i, x in enumerate(v):
+                proj = proj + x * plane(b, i)
+            if proj > 0.0:
+                out |= 1 << b
+        return out
+
+    got = sorted((r["vec_id"], r["__bucket"]) for r in
+                 with_bucket_ids(emb, n_bits=6).collect())
+    assert got == sorted((vid, bucket(v, 6)) for vid, v in rows)
 
 
 def test_ivf_ann_candidates_from_probed_cells_only(spark, sf_dir):

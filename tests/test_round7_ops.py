@@ -66,6 +66,9 @@ def test_mmr_zero_norm_candidate_does_not_crash(spark):
     assert len(out) == 4
     # rank 1 is the most relevant non-degenerate match
     assert out[0]["rank"] == 1
+    assert out[0]["vec_id"] == 0
+    # the zero-norm row's cosine is NULL (0/0), so it never enters the pool
+    assert 2 not in {r["vec_id"] for r in out}
 
 
 # --- warehouse GC for pid-suffixed tables (ADVICE r06 #4) -------------------
